@@ -14,7 +14,8 @@ checks its answer:
   whose expected answer is read from that edited table.
 
 The seed fixes the order of operations, every template parameter and
-every update payload; ``passes(workload, seed, n)`` is a pure function.
+every update payload: ``passes(workload, seed)`` yields the same passes
+for the same arguments.
 """
 
 from __future__ import annotations
@@ -22,10 +23,11 @@ from __future__ import annotations
 import random
 from dataclasses import dataclass
 
-from datagen import SEGMENTS
 from scio_sparql_spark import workload
 
 PREFIXES = workload.PREFIXES
+# the c_mktsegment values of the customer table
+SEGMENTS = ("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY")
 
 
 @dataclass(frozen=True)
@@ -74,19 +76,6 @@ TEMPLATES = _templates()
 # and once in the oracle SQL, and the chosen value replaces both.
 PARAMS = {
     "sparql_q3_shaped": [("BUILDING", SEGMENTS)],
-    "sparql_filter": [("< 15", [f"< {n}" for n in range(5, 46, 5)])],
-    "sparql_having": [(">= 12", [f">= {n}" for n in range(8, 15)])],
-    "sparql_subselect": [(">= 14", [f">= {n}" for n in range(10, 17)])],
-    "sparql_topk": [("LIMIT 10", [f"LIMIT {n}" for n in range(5, 21)])],
-    "sparql_offset": [("OFFSET 20", [f"OFFSET {n}" for n in range(10, 41)])],
-    "sparql_offset_limit": [
-        ("OFFSET 5 LIMIT 10",
-         [f"OFFSET {o} LIMIT {n}" for o in range(0, 10) for n in (5, 10, 15)])
-    ],
-    "sparql_values": [("EUROPE", ("AFRICA", "AMERICA", "EUROPE", "MIDDLE EAST"))],
-    "sparql_values_undef": [("EUROPE", ("AFRICA", "AMERICA", "EUROPE", "MIDDLE EAST"))],
-    "sparql_count_empty": [("< 0", [f"< {-n}" for n in range(0, 5)])],
-    "sparql_bind": [("0.1", ("0.1", "0.2", "0.25", "0.5"))],
 }
 
 
@@ -248,14 +237,13 @@ def make_update(kinds, rng: random.Random, nt_path: str, serial: int) -> Update:
                   tuple(edits), readback)
 
 
-def passes(workload_cfg, seed: int, n: int, nt_path: str = "/payload.nt") -> list:
-    """``n`` passes of operations for a workload. A pass runs every entry
+def passes(workload_cfg, seed: int, nt_path: str = "/payload.nt"):
+    """Endless passes of operations for a workload. A pass runs every entry
     of the workload's deck once: each query template with fresh
     parameters, or one update request per request size."""
     rng = random.Random(f"{workload_cfg.name}:{seed}")
-    out = []
     serial = 0
-    for _ in range(n):
+    while True:
         if workload_cfg.update_sizes:
             sizes = list(workload_cfg.update_sizes)
             rng.shuffle(sizes)
@@ -267,6 +255,4 @@ def passes(workload_cfg, seed: int, n: int, nt_path: str = "/payload.nt") -> lis
             names = list(workload_cfg.deck)
             rng.shuffle(names)
             ops = [make_query(name, rng) for name in names]
-        out.append(ops)
-    return out
-
+        yield ops

@@ -51,13 +51,14 @@ def _proc_jiffies(pid: int) -> int:
     return sum(int(x) for x in fields[11:15])
 
 
-def _machine_jiffies() -> tuple[int, int]:
-    """(busy, total) jiffies over all CPUs of the machine."""
+def _machine_jiffies() -> tuple[int, int, int]:
+    """(busy, steal, total) jiffies over all CPUs of the machine. Busy
+    includes steal: time the hypervisor gave the CPUs to other guests."""
     with open("/proc/stat") as f:
         vals = [int(x) for x in f.readline().split()[1:]]
-    idle = vals[3] + (vals[4] if len(vals) > 4 else 0)
+    idle = vals[3] + vals[4]
     total = sum(vals[:8])
-    return total - idle, total
+    return total - idle, vals[7], total
 
 
 @dataclass
@@ -65,13 +66,14 @@ class Sample:
     wall: float
     tree: int
     busy: int
+    steal: int
     total: int
 
     @classmethod
     def take(cls) -> "Sample":
-        busy, total = _machine_jiffies()
+        busy, steal, total = _machine_jiffies()
         tree = sum(_proc_jiffies(p) for p in tree_pids())
-        return cls(time.perf_counter(), tree, busy, total)
+        return cls(time.perf_counter(), tree, busy, steal, total)
 
 
 def cpu_seconds(a: Sample, b: Sample) -> float:
@@ -87,6 +89,7 @@ def contention(a: Sample, b: Sample) -> dict:
         load1, load5, load15 = (float(x) for x in f.read().split()[:3])
     return {
         "foreign_pct": round(100.0 * foreign / total, 3),
+        "steal_pct": round(100.0 * (b.steal - a.steal) / total, 3),
         "machine_busy_pct": round(100.0 * (b.busy - a.busy) / total, 3),
         "loadavg": [load1, load5, load15],
         "machine_cpus": os.cpu_count(),

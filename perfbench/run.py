@@ -2,22 +2,23 @@
 
 Run from the repository root:
 
-    python3 perfbench/run.py --workload analytics_sf0.02 --seed 1 --seconds 5 --trace 0
+    python3 perfbench/run.py --workload analytics_sf0.01 --seed 1 --seconds 15 --trace 0
 
 One closed-loop client in one process drives ``local[N]`` Spark through
 the package's public entry points (``execute_sparql``, ``execute_update``,
 ``to_result_json``; ``read_triples`` through SPARQL LOAD). A run
 
-1. builds the workload's tables once (cached under ``.bench_build/``),
-2. starts the Spark session and prepares the store several times;
-   ``setup_s`` is the session start plus the median preparation,
-3. runs an untimed warm-up: one pass over the query deck, or the
-   smallest update request,
-4. runs whole timed passes until ``--seconds`` have elapsed,
-5. checks every timed answer against DuckDB.
+1. checks its copy of the workload's tables (``perfbench/data``, byte
+   copies of the repository's test fixtures) against ``SHA256SUMS``,
+2. starts the Spark session and prepares the store,
+3. runs an untimed warm-up pass,
+4. prepares the store three more times; ``setup_s`` is the median of
+   the four preparations,
+5. runs whole timed passes until ``--seconds`` have elapsed,
+6. checks every timed answer against DuckDB.
 
 The last line of stdout is the result object; the line before it holds
-the details (latency split, tail percentile, contention). With
+the details (latency split, set-up split, contention). With
 ``--trace 1`` the timed part is one pass in which each operation runs
 twice, untraced and traced in alternating order, and the per-layer
 metrics come from the traced executions. See ``perfbench/NOTES.md``.
@@ -26,6 +27,7 @@ metrics come from the traced executions. See ``perfbench/NOTES.md``.
 from __future__ import annotations
 
 import argparse
+import hashlib
 import json
 import os
 import shutil
@@ -40,13 +42,13 @@ from dataclasses import dataclass
 T_START = time.perf_counter()
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
-SETUP_ROUNDS = 3
+SETUP_ROUNDS = 4
 
 
 @dataclass(frozen=True)
 class Workload:
     name: str
-    sf: float
+    data: str  # directory under perfbench/data
     tables: tuple  # the tables relationalized into the store
     deck: tuple = ()  # query template names, one op each per pass
     update_sizes: tuple = ()  # operations per update request, one request each
@@ -54,11 +56,11 @@ class Workload:
 
 WORKLOADS = {
     w.name: w for w in (
-        Workload("analytics_sf0.02", 0.02,
+        Workload("analytics_sf0.01", "sf0.01",
                  ("region", "nation", "customer", "orders", "lineitem"),
                  deck=("flagship", "sparql_q3_shaped", "sparql_agg_sum",
                        "sparql_optional")),
-        Workload("updates_sf0.001", 0.001, ("region", "nation", "customer"),
+        Workload("updates_sf0.001", "sf0.001", ("region", "nation", "customer"),
                  update_sizes=(1, 5)),
     )
 }
@@ -68,13 +70,23 @@ def _median(xs):
     return statistics.median(xs) if xs else 0.0
 
 
-def _tail(xs):
-    """(value, percentile, n): the highest percentile of xs with at least
-    ten samples beyond it, or None when there are fewer than 11."""
-    n = len(xs)
-    if n < 11:
-        return None
-    return sorted(xs)[n - 11], round(100.0 * (n - 10) / n, 2), n
+def check_data(data_dir: str) -> str | None:
+    """None when the tables under ``data_dir`` match the checksums in
+    ``perfbench/data/SHA256SUMS``, else what differs."""
+    root = os.path.dirname(data_dir)
+    with open(os.path.join(root, "SHA256SUMS")) as f:
+        sums = [line.split() for line in f if line.strip()]
+    prefix = os.path.basename(data_dir) + "/"
+    for digest, rel in sums:
+        if not rel.startswith(prefix):
+            continue
+        try:
+            with open(os.path.join(root, rel), "rb") as f:
+                if hashlib.sha256(f.read()).hexdigest() != digest:
+                    return f"{rel}: checksum differs"
+        except OSError as e:
+            return f"{rel}: {e}"
+    return None
 
 
 class Bench:
@@ -190,9 +202,7 @@ class Bench:
         if self.tracer is None:
             return fn()
         with self.tracer.span("action", "action"):
-            out = fn()
-        self.tracer.frames.append(("action", out))
-        return out
+            return fn()
 
     def _release(self):
         """Drop the store checkpoints an update request left behind."""
@@ -241,8 +251,6 @@ def main(argv=None) -> int:
     except ImportError as e:
         print(f"perfbench: cannot import the program from {ROOT}: {e}", file=sys.stderr)
         return 2
-    import datagen
-
     if args.workload not in WORKLOADS:
         print(f"perfbench: unknown workload {args.workload!r}; choose from "
               f"{', '.join(WORKLOADS)}", file=sys.stderr)
@@ -255,7 +263,11 @@ def main(argv=None) -> int:
     os.environ["TMPDIR"] = tempfile.tempdir = os.path.join(work, "tmp")
     os.environ["SPARK_LAUNCHER_OPTS"] = "-XX:-UsePerfData"  # spark-submit's own JVM
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(work, "spark-local")
-    data_dir = datagen.ensure_tables(os.path.join(work, "data"), wl.sf)
+    data_dir = os.path.join(HERE, "data", wl.data)
+    bad = check_data(data_dir)
+    if bad:
+        print(f"perfbench: input tables: {bad}", file=sys.stderr)
+        return 2
 
     bench = Bench(wl, work)
     try:
@@ -275,40 +287,34 @@ def _log(msg: str):
 
 
 def _run(bench, wl, args, data_dir) -> int:
-    import datagen
     import ops
     import oracle
     import procstat
 
     trace = bool(args.trace)
-    # pass 0 is the warm-up; timed passes follow. Enough are generated
-    # for any run length; unused ones cost nothing to make.
-    plan = ops.passes(wl, args.seed, 64, bench.nt_path)
+    # the first pass is the warm-up; timed passes follow
+    plan = ops.passes(wl, args.seed, bench.nt_path)
     if wl.update_sizes:
-        with oracle.Oracle(data_dir, datagen.TABLES) as orc:
+        with oracle.Oracle(data_dir, wl.tables) as orc:
             bench.write_payload(orc)
 
-    # --- set-up: one session, several store preparations ------------------
+    # --- set-up: one session, the first store preparation ------------------
     t0 = time.perf_counter()
     bench.start_session(trace)
     session_s = time.perf_counter() - t0
     rounds = []
-    for r in range(SETUP_ROUNDS):
-        if r:  # a fresh session object: the bridge memoizes per session
-            bench.spark = bench.spark.newSession()
+
+    def prepare():
         t0 = time.perf_counter()
         bench.prepare_store(data_dir)
         rounds.append(time.perf_counter() - t0)
-    setup_s = session_s + _median(rounds)
-    _log(f"session {session_s:.2f}s, store preparation {rounds}")
 
-    # --- warm-up: the first pass (for updates its smallest request) -------
-    warm = plan[0]
-    if wl.update_sizes:
-        warm = [min(warm, key=lambda u: u.text.count(" ;\n"))]
+    prepare()
+
+    # --- warm-up: the first pass --------------------------------------------
     t0 = time.perf_counter()
     warmup_errors = []
-    for op in warm:
+    for op in next(plan):
         try:
             bench.run_op(op)
         except Exception:
@@ -317,21 +323,31 @@ def _run(bench, wl, args, data_dir) -> int:
     warmup_s = time.perf_counter() - t0
     _log(f"warm-up pass: {warmup_s:.2f}s")
 
+    # --- the store prepared again, each time in a fresh session object (the
+    # bridge memoizes per session); after the warm-up, so that these rounds
+    # measure the preparation rather than the JVM's compilation of it. The
+    # timed part then runs on the warmed-up store.
+    warmed = (bench.spark, bench.quads, bench.catalog)
+    for _ in range(SETUP_ROUNDS - 1):
+        bench.spark = warmed[0].newSession()
+        prepare()
+    bench.spark, bench.quads, bench.catalog = warmed
+    setup_s = _median(rounds)
+    _log(f"session {session_s:.2f}s, store preparation {rounds}")
+
     # --- timed part ------------------------------------------------------
     records = []  # (op, latency, answer or exception text)
     s0 = procstat.Sample.take()
     traced = []
     if not trace:
-        i = 1
         while True:
-            for op in plan[i]:
+            for op in next(plan):
                 try:
                     lat, ans = bench.run_op(op)
                     records.append((op, lat, ans))
                 except Exception:
                     records.append((op, None, traceback.format_exc(limit=3)))
-            i += 1
-            if time.perf_counter() - s0.wall >= args.seconds or i == len(plan):
+            if time.perf_counter() - s0.wall >= args.seconds:
                 break
     else:
         from tracing import Tracer
@@ -339,7 +355,7 @@ def _run(bench, wl, args, data_dir) -> int:
         tracer = Tracer(bench.spark)
         tracer.install()
         try:
-            for j, op in enumerate(plan[1]):
+            for j, op in enumerate(next(plan)):
                 order = (False, True) if j % 2 == 0 else (True, False)
                 for traced_run in order:
                     bench.tracer = tracer if traced_run else None
@@ -372,7 +388,7 @@ def _run(bench, wl, args, data_dir) -> int:
     # --- oracle ----------------------------------------------------------
     t_check = time.perf_counter()
     wrong = []
-    with oracle.Oracle(data_dir, datagen.TABLES) as orc:
+    with oracle.Oracle(data_dir, wl.tables) as orc:
         for op, lat, ans in records:
             if lat is None:
                 wrong.append({"op": op.name, "error": ans[-400:]})
@@ -396,9 +412,6 @@ def _run(bench, wl, args, data_dir) -> int:
         "failures": wrong[:5],
         "warmup_failures": warmup_errors[:5],
     }
-    tail = _tail(lats)
-    if tail:
-        detail["op_tail"] = {"seconds": tail[0], "percentile": tail[1], "samples": tail[2]}
     if wl.update_sizes:
         detail["update_p50_s"] = _median(
             [a["update_s"] for _, lat, a in records if lat is not None])
@@ -408,16 +421,22 @@ def _run(bench, wl, args, data_dir) -> int:
     for op, lat, _ in records:
         if lat is not None:
             per_template.setdefault(op.name, []).append(lat)
-    detail["per_template_p50_s"] = {k: round(_median(v), 4) for k, v in per_template.items()}
+    template_p50 = {k: _median(v) for k, v in per_template.items()}
+    detail["per_template_p50_s"] = {k: round(v, 4) for k, v in template_p50.items()}
     if trace:
         detail["layer_self_s"] = self_s
+        detail["catalyst_ms_by_frame"] = {
+            tag: tracer.catalyst_phases(tag) for tag in ("results", "update", "action")}
 
     if trace:
         metrics = {k: {"value": v, "unit": u} for k, (v, u) in layer.items()}
     else:
         metrics = {
             "setup_s": {"value": setup_s, "unit": "s"},
-            "op_p50_s": {"value": _median(lats), "unit": "s"},
+            # every template's median latency weighs the same, however
+            # far apart the templates' latencies lie
+            "op_p50_gmean_s": {"value": statistics.geometric_mean(template_p50.values())
+                               if template_p50 else 0.0, "unit": "s"},
             "ops_per_min": {"value": 60.0 * ops_done / timed_wall, "unit": "ops/min"},
             "cpu_s_per_op": {"value": procstat.cpu_seconds(s0, s1) / max(ops_done, 1),
                              "unit": "s"},
@@ -469,7 +488,7 @@ def _layer_metrics(tracer, traced, bench) -> dict:
             c.get("optimize.fused_patterns", 0.0) / max(c.get("optimize.patterns", 0.0), 1.0),
             "ratio"),
         "compiler.busy_s": (tracer.busy("compiler"), "s"),
-        "compiler.py4j_calls": (c.get("py4j.compiler", 0.0), "count"),
+        "compiler.py4j_calls": (c.get("compiler.py4j_calls", 0.0), "count"),
         "catalyst.analysis_ms": (phases["analysis"], "ms"),
         "catalyst.optimization_ms": (phases["optimization"], "ms"),
         "catalyst.planning_ms": (phases["planning"], "ms"),

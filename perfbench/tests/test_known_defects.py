@@ -10,17 +10,6 @@ from py4j.protocol import Py4JJavaError
 
 
 @pytest.fixture(scope="module")
-def spark(tmp_path_factory):
-    from pyspark.sql import SparkSession
-
-    s = (SparkSession.builder.master("local[1]").appName("perfbench-tests")
-         .config("spark.ui.enabled", "false")
-         .config("spark.sql.shuffle.partitions", "1").getOrCreate())
-    s.sparkContext.setLogLevel("OFF")
-    yield s
-
-
-@pytest.fixture(scope="module")
 def store(spark, tiny_tables):
     from scio_sparql_spark.sources.bridge import bridge_ctx
 

@@ -1,18 +1,25 @@
 """The seeded op generator and the oracle gate."""
 
+import itertools
 import json
+import os
 import random
 
+import duckdb
 import pytest
+from conftest import data_dir
 
 import ops
 import oracle
 import run
-from datagen import TABLES
 
 
 def _plan(name, seed, n=3):
-    return ops.passes(run.WORKLOADS[name], seed, n, "/payload/*.nt")
+    return list(itertools.islice(ops.passes(run.WORKLOADS[name], seed, "/payload.nt"), n))
+
+
+def _oracle(name):
+    return oracle.Oracle(data_dir(name), run.WORKLOADS[name].tables)
 
 
 @pytest.mark.parametrize("name", sorted(run.WORKLOADS))
@@ -37,8 +44,8 @@ def test_every_pass_runs_the_whole_deck(name):
 
 
 @pytest.mark.parametrize("name", sorted(run.WORKLOADS))
-def test_every_op_has_an_oracle(name, tiny_tables):
-    orc = oracle.Oracle(tiny_tables, TABLES)
+def test_every_op_has_an_oracle(name):
+    orc = _oracle(name)
     try:
         for ops_ in _plan(name, 11):
             for op in ops_:
@@ -50,13 +57,15 @@ def test_every_op_has_an_oracle(name, tiny_tables):
         orc.close()
 
 
-@pytest.mark.parametrize("name", sorted(ops.TEMPLATES))
-def test_every_catalog_template_has_an_oracle(name, tiny_tables):
-    orc = oracle.Oracle(tiny_tables, TABLES)
-    try:
-        orc.query(ops.make_query(name, random.Random(0)))
-    finally:
-        orc.close()
+@pytest.mark.parametrize("name", sorted(run.WORKLOADS))
+def test_input_tables_match_their_checksums(name):
+    assert run.check_data(data_dir(name)) is None
+
+
+def test_segments_are_those_of_the_customer_table():
+    path = os.path.join(data_dir("analytics_sf0.01"), "customer.parquet")
+    rows = duckdb.sql(f"SELECT DISTINCT c_mktsegment FROM read_parquet('{path}')").fetchall()
+    assert sorted(r[0] for r in rows) == sorted(ops.SEGMENTS)
 
 
 def _json_answer(q, rows):
@@ -71,8 +80,8 @@ def _json_answer(q, rows):
     return {"json": json.dumps({"head": {"vars": []}, "results": {"bindings": bindings}})}
 
 
-def test_gate_accepts_the_right_answer_and_rejects_wrong_ones(tiny_tables):
-    orc = oracle.Oracle(tiny_tables, TABLES)
+def test_gate_accepts_the_right_answer_and_rejects_wrong_ones():
+    orc = _oracle("analytics_sf0.01")
     try:
         q = ops.make_query("sparql_agg_sum", random.Random(0))
         rows = [list(r) for r in orc.query(q)]
@@ -87,8 +96,8 @@ def test_gate_accepts_the_right_answer_and_rejects_wrong_ones(tiny_tables):
         orc.close()
 
 
-def test_gate_checks_update_readbacks_against_the_edited_tables(tiny_tables):
-    orc = oracle.Oracle(tiny_tables, TABLES)
+def test_gate_checks_update_readbacks_against_the_edited_tables():
+    orc = _oracle("updates_sf0.001")
     try:
         u = _plan("updates_sf0.001", 5, 1)[0][0]
         rows = orc.update(u)

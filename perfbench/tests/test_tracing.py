@@ -1,4 +1,5 @@
-"""Span arithmetic of the traced run (no Spark session needed)."""
+"""Span arithmetic of the traced run, and the frames it reads Catalyst
+phases from."""
 
 from types import SimpleNamespace
 
@@ -32,3 +33,23 @@ def test_union_of_job_intervals():
     assert run._union_s([]) == 0.0
     assert run._union_s([(0, 1000), (500, 1500), (3000, 4000)]) == 2.5
     assert run._union_s([(0, 4000), (1000, 2000)]) == 4.0
+
+
+def test_checkpointed_frames_are_recorded_with_their_phase(spark):
+    """The Catalyst metrics read the frame whose plan a checkpoint ran,
+    tagged by whether execute_update or the benchmark's action ran it."""
+    t = Tracer(spark)
+    t.install()
+    try:
+        t.begin_op("op0")
+        inner, outer = spark.range(10), spark.range(20)
+        with t.span("update"):
+            inner.localCheckpoint()
+        outer.localCheckpoint(eager=True)
+        t.end_op()
+        spark.range(30).localCheckpoint()  # outside an op: not recorded
+    finally:
+        t.uninstall()
+    assert [tag for tag, _ in t.frames] == ["update", "action"]
+    assert t.frames[0][1] is inner and t.frames[1][1] is outer
+    assert t.catalyst_phases("update")["planning"] >= 0.0

@@ -20,6 +20,7 @@ from collections import defaultdict
 
 import py4j.clientserver
 from py4j.protocol import Py4JJavaError
+from pyspark.sql.classic.dataframe import DataFrame
 
 import scio_sparql_spark as pkg
 from scio_sparql_spark import algebra as A
@@ -60,7 +61,7 @@ class Tracer:
         self.spans: list[dict] = []
         self.counts: dict[str, float] = defaultdict(float)
         self.groups: dict[str, tuple] = {}  # job group -> (op id, phase)
-        self.frames: list = []  # DataFrames whose action ran in an op
+        self.frames: list = []  # (tag, DataFrame) whose plan ran in an op
         self.op = None
         self._stack: list[dict] = []
         self._group = None
@@ -124,11 +125,24 @@ class Tracer:
 
         self._saved.append((results, "to_result_json_df", orig_json_df))
         results.to_result_json_df = to_result_json_df
+        orig_ck = DataFrame.localCheckpoint
+
+        def local_checkpoint(df, *a, **kw):
+            out = orig_ck(df, *a, **kw)
+            if self.op is not None:
+                # the checkpoint ran df's plan: the eager ones inside
+                # execute_update and the benchmark's own action
+                in_update = any(s["layer"] == "update" for s in self._stack)
+                self.frames.append(("update" if in_update else "action", df))
+            return out
+
+        self._saved.append((DataFrame, "localCheckpoint", orig_ck))
+        DataFrame.localCheckpoint = local_checkpoint
         orig_send = py4j.clientserver.JavaClient.send_command
 
         def send_command(client, command, *a, **kw):
-            if self._stack:
-                self.counts[f"py4j.{self._stack[-1]['layer']}"] += 1
+            if self._stack and self._stack[-1]["layer"] == "compiler":
+                self.counts["compiler.py4j_calls"] += 1
             return orig_send(client, command, *a, **kw)
 
         self._saved.append((py4j.clientserver.JavaClient, "send_command", orig_send))
